@@ -15,7 +15,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   *   GET /query/<name>?sortBy=<col>[&dir=asc|desc][&offset=N][&pageSize=N]
   *       → JSON array of row objects (one page of the positional index)
   *   GET /count/<name>?sortBy=<col>[&dir=asc|desc]
-  *       → {"count": N} (row-group metadata read, no data scan)
+  *       → {"count": N} (counted once per index from row-group
+  *       metadata, then served from memory)
   *   GET /submit/<name>?…   → {"id":…} async page build under a job group
   *   GET /status/<id>       → status + task-level progress (heartbeat)
   *   GET /result/<id>[?offset=N&pageSize=N] → the submit-time page once

@@ -51,7 +51,7 @@ object ResultCache {
     * bound across distinct cache paths in a long-lived server. */
   private val NStripes = 64
   private val buildLocks = Array.fill(NStripes)(new Object)
-  private def lockFor(path: String): Object =
+  private[graft] def lockFor(path: String): Object =
     buildLocks(math.floorMod(path.hashCode, NStripes))
 
   /** Serve from cache when present, else compute + materialize. The
@@ -73,7 +73,11 @@ object ResultCache {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     def ready = fs.exists(new Path(p, "_SUCCESS"))
-    lockFor(path).synchronized {
+    // probe once before the lock: a hit never waits behind an unrelated
+    // build that happens to share its stripe; the build path probes again
+    // under the lock, so a request that lost the race to build reads the
+    // winner's entry instead of building a second copy
+    if (!ready) lockFor(path).synchronized {
       if (!ready) {
         val tmp = new Path(s"$path.build-${java.util.UUID.randomUUID}")
         compute.write.mode("overwrite").parquet(tmp.toString)

@@ -3,6 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.graftbridge.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
 import graft.queries.{QueryServer, Registry}
 
 /** §3.1 interactive serving: the positional-index page server must
@@ -14,6 +17,23 @@ class QueryServerSpec extends AnyFunSuite with SparkSuite {
   private def newServer(): (QueryServer, String) = {
     val dir = java.nio.file.Files.createTempDirectory("qserver").toString
     (new QueryServer(spark, dir, sfDir), dir)
+  }
+
+  /** Spark jobs started by `f` on this thread (and its broadcast and
+    * subquery threads, which inherit the job group). */
+  private def jobsIn(f: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try { f; ListenerBus.drain(sc); n.get }
+    finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
   }
 
   test("pages equal direct orderBy/offset/limit in both directions") {
@@ -138,5 +158,51 @@ class QueryServerSpec extends AnyFunSuite with SparkSuite {
     pool.shutdown()
     assert(results(0) == results(1))
     assert(results(0).nonEmpty)
+  }
+
+  test("a warm page is one Spark job: no builder run, no range sampling") {
+    // g5_pagerank's builder runs PageRank with eager persists, so a page
+    // that re-ran it would start many jobs; a range-sorted page would add
+    // a bounds-sampling job to the scan
+    val (server, _) = newServer()
+    val name = "g5_pagerank"
+    val req = server.PageRequest("rank_u", ascending = true, offset = 3, pageSize = 5)
+    val first = server.page(name, req).collect()
+    assert(first.length == 5)
+    assert(jobsIn(server.page(name, req.copy(offset = 6)).collect()) == 1)
+  }
+
+  test("a warm page plans no range exchange and still prunes on pos") {
+    val (server, _) = newServer()
+    val name = "w3_dual_sort"
+    val base = Registry.queries(name)(spark, sfDir)
+    val req = server.PageRequest(base.columns.head, ascending = false, offset = 4, pageSize = 3)
+    server.page(name, req).collect()
+    val plan = server.page(name, req).queryExecution.executedPlan.toString
+    assert(!plan.contains("rangepartitioning"), s"page plans a range sort:\n$plan")
+    assert(plan.contains("PushedFilters") && plan.contains("GreaterThan(pos"),
+      s"pos range not pushed to the scan:\n$plan")
+  }
+
+  test("an unknown sort column fails before any build and leaves the cache dir empty") {
+    val (server, dir) = newServer()
+    for (_ <- 1 to 2) { // the failed request must not have memoized anything
+      val e = intercept[IllegalArgumentException] {
+        server.page("w2_pagination", server.PageRequest("no_such_column"))
+      }
+      assert(e.getMessage.contains("unknown sort column 'no_such_column'"))
+    }
+    assert(new java.io.File(dir).list().isEmpty,
+      s"left behind: ${new java.io.File(dir).list().mkString(", ")}")
+  }
+
+  test("a repeat count is served from memory") {
+    val (server, _) = newServer()
+    val name = "w2_pagination"
+    val base = Registry.queries(name)(spark, sfDir)
+    val req = server.PageRequest(base.columns.head)
+    val n = base.count()
+    assert(server.resultCount(name, req) == n)
+    assert(jobsIn(assert(server.resultCount(name, req) == n)) == 0)
   }
 }

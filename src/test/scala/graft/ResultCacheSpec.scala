@@ -151,4 +151,20 @@ class ResultCacheSpec extends AnyFunSuite with SparkSuite {
     assert(before == after)
     assert(!new java.io.File(dir).listFiles().exists(_.getName.contains(".build-")))
   }
+
+  test("a hit never waits behind a build holding its lock stripe") {
+    val dir = Files.createTempDirectory("result_cache_stripe").toString
+    val params = Map("p" -> "1")
+    def hit() = ResultCache.getOrCompute(spark, dir, "q", params) {
+      Registry.table(spark, sfDir, "region").limit(2)
+    }
+    hit()
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    // this thread stands in for an unrelated build on the same stripe
+    ResultCache.lockFor(s"$dir/${ResultCache.canonicalId("q", params)}").synchronized {
+      assert(Await.result(Future(hit().count()), 60.seconds) == 2L)
+    }
+  }
 }
