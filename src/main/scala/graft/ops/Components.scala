@@ -33,8 +33,7 @@ object Components {
   def starContractWithRounds(
       pairs: DataFrame, a: String = "a", b: String = "b",
       maxIters: Int = 30): (DataFrame, Int) = {
-    val spark = pairs.sparkSession
-    val mat = Iterative.materializer(spark, None)
+    val mat: DataFrame => DataFrame = Iterative.materialize
     var edges = mat(pairs
       .select(least(col(a), col(b)).as("lo"), greatest(col(a), col(b)).as("hi"))
       .filter(col("lo") =!= col("hi"))
@@ -84,9 +83,11 @@ object Components {
       // window's one |E'| exchange-by-hi replaces the join's), minus
       // the full ls checkpoint write per round. Row identity with the
       // r5–r20 two-mat round is exact (same multiset before the final
-      // distinct); measured at sf0.1 interleaved in one JVM
-      // (tools/StarScratch): jobs/run 126 → 86, warm wall
-      // 5.2–5.7 → 3.8–4.7 s, outputs set-identical, rounds unchanged.
+      // distinct); measured at sf0.1 interleaved in one JVM by a
+      // scratch A/B harness since removed from src/main (evidence:
+      // plans/r21/g17_components_*, OPTIMIZATION_r21.md g17 section):
+      // jobs/run 126 → 86, warm wall 5.2–5.7 → 3.8–4.7 s, outputs
+      // set-identical, rounds unchanged.
       // Skew note: AQE cannot split a window partition the way it can
       // a skewed SMJ, so a mega-hub's small-star group is one task here
       // — bounded by the hub's SMALLER-neighbor count in the current
@@ -94,9 +95,9 @@ object Components {
       // neighbors at minima, and rounds shrink degrees fast). The
       // skew-splittable fallback — groupBy+join WITHOUT the ls
       // checkpoint, second consumption riding ReusedExchange — was
-      // measured too: 110 jobs / 4.4–4.7 s (tools/StarScratch variant
-      // D); switch to it if a production graph ever straggles on this
-      // window.
+      // measured too (variant D of the same harness): 110 jobs /
+      // 4.4–4.7 s; switch to it if a production graph ever straggles on
+      // this window.
       edges = mat(ls
         .withColumn("m", min(col("lo")).over(
           org.apache.spark.sql.expressions.Window.partitionBy("hi")))

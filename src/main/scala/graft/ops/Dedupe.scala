@@ -852,23 +852,19 @@ object Dedupe {
     * min-label propagation (reference G4: DeduperUtils.SetUnionFinder,
     * Stage2Reducer) — the distributed union-find for dedupe clusters.
     * Converges in O(log n) rounds on dedupe-cluster-shaped graphs; each
-    * round is one shuffle, with lineage truncated per round (reliable
-    * checkpoints when `checkpointDir` is set — see [[Iterative]]). */
+    * round is one shuffle, with lineage truncated per round through
+    * [[Iterative.materialize]]. */
   def connectedComponents(pairs: DataFrame, a: String = "doc_a", b: String = "doc_b",
-      maxIters: Int = 20, checkpointDir: Option[String] = None): DataFrame = {
-    val mat = Iterative.materializer(pairs.sparkSession, checkpointDir)
-    // undirected edge list, both directions — the loop invariant. Cached
+      maxIters: Int = 20): DataFrame = {
+    val pins = new Iterative.Pins(pairs.sparkSession)
+    val mat: DataFrame => DataFrame = Iterative.materialize
+    // undirected edge list, both directions — the loop invariant. Pinned
     // pre-partitioned on dst (the per-round join key) so rounds re-read
-    // the cache without re-shuffling the O(edges) side; persist (not
-    // checkpoint) because LogicalRDD drops outputPartitioning. Only the
+    // the cache without re-shuffling the O(edges) side. Only the
     // O(nodes) label state moves each round.
-    val edges = pairs.select(col(a).as("src"), col(b).as("dst"))
+    val edges = pins.invariant(pairs.select(col(a).as("src"), col(b).as("dst"))
       .union(pairs.select(col(b).as("src"), col(a).as("dst")))
-      .distinct()
-      .repartition(
-        pairs.sparkSession.sessionState.conf.numShufflePartitions, col("dst"))
-      .persist()
-    edges.count() // materialize once; iterations re-read, not re-derive
+      .distinct(), Some("dst"))
     var labels = mat(edges.select(col("src").as("id"))
       .distinct()
       .withColumn("label", col("id")))
@@ -901,7 +897,7 @@ object Dedupe {
     }
     // labels is materialized (mat per round), so the invariant cache can
     // be released before returning — no dead entries in long sessions
-    edges.unpersist()
+    pins.release()
     labels.withColumnRenamed("label", "cluster_id")
   }
 }

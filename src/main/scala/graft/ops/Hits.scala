@@ -28,8 +28,8 @@ import org.apache.spark.sql.functions._
   * for the auth step, `dst_domain` for the hub step) — inside the loop only
   * the O(nodes) score state shuffles, plus the unavoidable contribution
   * re-key (the groupBy that re-aggregates contributions by the opposite
-  * endpoint). Each iteration's state is checkpoint-materialized so lineage
-  * stays flat over any depth.
+  * endpoint). Each iteration's state goes through [[Iterative.materialize]]
+  * so lineage stays flat over any depth.
   */
 object Hits {
 
@@ -42,25 +42,19 @@ object Hits {
     * apart because crawl-graph source/target id namespaces may overlap
     * (customers vs suppliers in the test mapping). */
   def run(edges: DataFrame, iters: Int,
-      checkpointDir: Option[String] = None,
       normalize: Boolean = false): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(normalize || iters <= 3,
       s"unnormalized HITS is overflow-safe only to 3 iterations; pass normalize=true for iters=$iters")
-    val spark = edges.sparkSession
-    val mat = Iterative.materializer(spark, checkpointDir)
-    val nParts = spark.sessionState.conf.numShufflePartitions
-    def pinned(df: DataFrame, key: String): DataFrame = {
-      val p = df.repartition(nParts, col(key)).persist()
-      p.count() // materialize now so every iteration reads the cache
-      p
-    }
+    val pins = new Iterative.Pins(edges.sparkSession)
+    val mat: DataFrame => DataFrame = Iterative.materialize
     // the caller's edge plan can be an arbitrarily expensive multi-join
     // derivation: materialize it exactly ONCE (the src-partitioned pin),
     // and build the dst-partitioned copy FROM that cache — two pins of
     // the raw plan would run the whole derivation twice
-    val bySrc = pinned(edges.select("src_domain", "dst_domain", "n_links"), "src_domain")
-    val byDst = pinned(bySrc, "dst_domain")
+    val bySrc = pins.invariant(edges.select("src_domain", "dst_domain", "n_links"),
+      Some("src_domain"))
+    val byDst = pins.invariant(bySrc, Some("dst_domain"))
 
     def rescale(df: DataFrame, scoreCol: String): DataFrame =
       if (!normalize) df
@@ -107,8 +101,7 @@ object Hits {
       auth.select(lit("auth").as("role"), col("node"), col("a").as("score_u"))
         .unionByName(
           hub.select(lit("hub").as("role"), col("node"), col("h").as("score_u"))))
-    bySrc.unpersist()
-    byDst.unpersist()
+    pins.release()
     out
   }
 }

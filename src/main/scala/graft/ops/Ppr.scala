@@ -13,18 +13,16 @@ import org.apache.spark.sql.functions._
   *
   * Same numeric discipline as [[PageRank]]: the loop is FIXED-POINT
   * integer arithmetic end to end (rank in 1e-12 units, `div` for every
-  * division, damping split as `(acc div 1000)·850 + ((acc mod 1000)·850)
-  * div 1000`), so every iteration is exact, order-insensitive and
-  * bit-reproducible — the g12 oracle replays the whole loop in SQL and
-  * must hash-match.
+  * division, damping through [[PageRank.damped]]), so every iteration
+  * is exact, order-insensitive and bit-reproducible — the g12 oracle
+  * replays the whole loop in SQL and must hash-match.
   *
   * Same scale discipline as [[PageRank]]: the out-degree-annotated edge
-  * table — the O(data) side — is cached pre-partitioned on the
+  * table — the O(data) side — is pinned pre-partitioned on the
   * per-iteration join key and never re-shuffles inside the loop; only
   * the O(nodes) rank state moves per iteration; the seed set is O(seeds)
-  * and broadcast once into the node table. Per-iteration state goes
-  * through [[Iterative]]'s materializer (reliable `checkpoint()` when a
-  * dir is configured) so lineage stays flat over long walks.
+  * and broadcast once into the node table. State generations go
+  * through [[Iterative.Pins]], so lineage stays flat over long walks.
   */
 object Ppr {
 
@@ -34,60 +32,27 @@ object Ppr {
     * fixed-point units; seeds start with full Scale mass, everything
     * else at 0, and each iteration re-injects the 0.15 restart mass at
     * the seeds only. */
-  def run(edges: DataFrame, seeds: DataFrame, iters: Int,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val spark = edges.sparkSession
-    val mat = Iterative.materializer(spark, checkpointDir)
-    val nParts = spark.sessionState.conf.numShufflePartitions
+  def run(edges: DataFrame, seeds: DataFrame, iters: Int): DataFrame = {
+    val pins = new Iterative.Pins(edges.sparkSession)
     // one setup shuffle for the O(edges) side; everything keyed by
     // src_domain (out-degree agg, degree join, the loop's rank join)
     // rides this single partitioning with no further Exchange
-    val edgesIn = edges.select("src_domain", "dst_domain")
-      .repartition(nParts, col("src_domain")).persist()
-    edgesIn.count()
+    val edgesIn = pins.invariant(edges.select("src_domain", "dst_domain"),
+      Some("src_domain"))
     val outdeg = edgesIn.groupBy("src_domain").agg(count(lit(1)).as("outdeg"))
-    val e = edgesIn.join(outdeg, "src_domain").persist()
-    e.count()
+    val e = pins.invariant(edgesIn.join(outdeg, "src_domain"))
     val nodesAll = edgesIn.select(col("src_domain").as("domain"))
       .unionByName(edgesIn.select(col("dst_domain").as("domain")))
       .distinct()
     // the seed set is a model-sized side input: broadcast it into the
     // node table once — the flag then travels with the O(nodes) state
-    val nodes = nodesAll
+    val nodes = pins.invariant(nodesAll
       .join(broadcast(seeds.select(col("domain").as("sd"), lit(1L).as("flag"))),
         col("domain") === col("sd"), "left")
-      .select(col("domain"), coalesce(col("flag"), lit(0L)).as("is_seed"))
-      .repartition(nParts, col("domain")).persist()
-    nodes.count()
-    edgesIn.unpersist() // e and nodes are pinned; the raw plan is done
+      .select(col("domain"), coalesce(col("flag"), lit(0L)).as("is_seed")),
+      Some("domain"))
+    pins.release(edgesIn) // e and nodes are pinned; the raw plan is done
 
-    // r21: same state pinning as PageRank.run — per-iteration state is
-    // PERSISTED (keeps HashPartitioning(domain, nParts) visible, so the
-    // e ⨝ ranks join is exchange-free) unless a reliable checkpoint dir
-    // is configured; see the PageRank.run comment for the measured
-    // trade and the fault story.
-    val reliable = checkpointDir.orElse(
-      Option(spark.conf.get(Iterative.CheckpointDirKey, null))
-        .filter(_.nonEmpty)).isDefined
-    // every 8th generation goes through the materializer to cut lineage
-    // (see the PageRank.run comment: persist keeps partitioning but
-    // nests the analyzed plan per generation; unbounded chains OOM the
-    // SQL-event explain strings)
-    val LineageCutEvery = 8
-    var gen = 0
-    var pinnedPrev: Option[DataFrame] = None
-    def pinState(df: DataFrame): DataFrame =
-      if (reliable) mat(df)
-      else {
-        gen += 1
-        val p =
-          if (gen % LineageCutEvery == 0) mat(df)
-          else { val q = df.persist(); q.count(); q }
-        // unpersist of a checkpoint generation is a CacheManager no-op
-        pinnedPrev.foreach(_.unpersist(false))
-        pinnedPrev = Some(p)
-        p
-      }
     // iteration 0 rides the nodes cache directly (a projection over the
     // domain-partitioned invariant)
     var ranks = nodes.withColumn("rank_u",
@@ -102,15 +67,14 @@ object Ppr {
       val next = nodes
         .join(acc, col("domain") === col("dst_domain"), "left")
         .select(col("domain"), col("is_seed"),
-          (col("is_seed") * lit(150000000000L) +
-            expr("(coalesce(acc, 0) div 1000) * 850 + ((coalesce(acc, 0) % 1000) * 850) div 1000"))
+          (col("is_seed") * lit(PageRank.Teleport) + PageRank.damped("acc"))
             .as("rank_u"))
-      ranks = if (iter < iters) pinState(next) else next
+      ranks = if (iter < iters) pins.state(next) else next
       iter += 1
     }
-    val out = pinState(ranks)
-    nodes.unpersist()
-    e.unpersist()
+    // materialized before the pins go, and no cache entry outlives the call
+    val out = Iterative.materialize(ranks)
+    pins.release()
     out
   }
 }

@@ -177,8 +177,10 @@ object DedupeQueries {
     val c = sh.select(col("doc_id"), array_sort(col("sh")).as("csh"))
     val p = sh.where(col("doc_id") < P)
       .select(col("doc_id").as("probe_id"), array_sort(col("sh")).as("psh"))
+    // the non-empty test keeps empty–empty pairs out: their Jaccard is
+    // NaN, and Spark orders NaN above every number
     c.join(broadcast(p),
-        col("doc_id") =!= col("probe_id") &&
+        col("doc_id") =!= col("probe_id") && size(col("csh")) > 0 &&
           size(col("csh")) * 5 >= size(col("psh")) * 4 &&
           size(col("psh")) * 5 >= size(col("csh")) * 4 &&
           graft.functions.NativeExpressions

@@ -298,12 +298,12 @@ object GraphQueries {
         val superRoots = Registry.table(s, dir, "nation")
           .filter(col("n_nationkey") < SuperMax)
           .select(col("n_nationkey").cast("long").as("root"))
-        // checkpointInterval = 1 (the default): measured on local[32] at
-        // sf0.1, materializing every round beats letting the 5-iteration chain
-        // pipeline as one job (13.0 s vs 18.9 s end-to-end) — the fused
-        // plan is ~20 chained shuffles that Catalyst re-optimizes as one
-        // giant DAG, and each rank state is re-derived through the whole
-        // prefix when the optimizer can't see it's consumed once.
+        // PageRank.run pins every round's ranks: measured on local[32] at
+        // sf0.1, that beats letting the 5-iteration chain pipeline as one
+        // job (13.0 s vs 18.9 s end-to-end) — the fused plan is ~20
+        // chained shuffles that Catalyst re-optimizes as one giant DAG,
+        // and each rank state is re-derived through the whole prefix
+        // when the optimizer can't see it's consumed once.
         PageRank.run(prEdges(s, dir), superRoots, PrIters)
           .orderBy("domain")
       },

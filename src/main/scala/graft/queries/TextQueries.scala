@@ -891,7 +891,7 @@ object TextQueries {
     // bit-for-bit with unrolled CTEs. Scale shape: the O(edges) table is
     // shuffled ONCE onto src and persisted; each round moves only the
     // O(vocab) rank state; per-round state is checkpoint-materialized
-    // (Iterative.materializer) so lineage stays flat; final top-50 is
+    // (Iterative.materialize) so lineage stays flat; final top-50 is
     // TakeOrderedAndProject.
     Q(
       "t19_textrank",
@@ -902,7 +902,7 @@ object TextQueries {
           explode(array_distinct(
             filter(split(lower(col("text")), "[^a-z]+"),
               t => length(t) >= 5))).as("tok"))
-        val mat = graft.ops.Iterative.materializer(s, None)
+        val mat = graft.ops.Iterative.materialize _
         // the pair table feeds four consumers in the setup (both union
         // sides of `sym`, each appearing again under `deg`): checkpoint
         // the corpus-scale co-occurrence aggregation ONCE so the doc-
@@ -916,10 +916,9 @@ object TextQueries {
           .filter(col("cnt") >= 3))
         val sym = pairs.select(col("x").as("src"), col("y").as("dst"))
           .unionByName(pairs.select(col("y").as("src"), col("x").as("dst")))
-        val nParts = s.sessionState.conf.numShufflePartitions
+        val pins = new graft.ops.Iterative.Pins(s)
         val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
-        val e = sym.join(deg, "src").repartition(nParts, col("src")).persist()
-        e.count()
+        val e = pins.invariant(sym.join(deg, "src"), Some("src"))
         var r = e.select(col("src").as("word")).distinct()
           .select(col("word"), lit(1000000000L).as("rank_u"))
         for (_ <- 1 to iters) {
@@ -946,7 +945,7 @@ object TextQueries {
                 .stripMargin).as("rank_u")))
         }
         val out = r.orderBy(col("rank_u").desc, col("word")).limit(50)
-        e.unpersist()
+        pins.release()
         out
       },
       Some {

@@ -69,66 +69,6 @@ object Profile {
         .write.format("noop").mode("overwrite").save()
       0L
     }
-    // ---- g5 checkpoint cadence ----
-    val superRoots5 = graft.queries.Registry.table(spark, dir, "nation")
-      .filter(col("n_nationkey") < 5)
-      .select(col("n_nationkey").cast("long").as("root"))
-    time("g5-prEdges-only") {
-      graft.queries.GraphQueries.prEdges(spark, dir).count()
-    }
-    // phase breakdown of PageRank.run (duplicates its internals)
-    locally {
-      val nParts = spark.sessionState.conf.numShufflePartitions
-      val edgesIn = graft.queries.GraphQueries.prEdges(spark, dir).persist()
-      time("g5p-edges-persist")(edgesIn.count())
-      val nodes = edgesIn.select(col("src_domain").as("domain"), col("src_root").as("root"))
-        .unionByName(edgesIn.select(col("dst_domain").as("domain"), col("dst_root").as("root")))
-        .distinct().repartition(nParts, col("domain")).persist()
-      time("g5p-nodes-pin")(nodes.count())
-      val outdeg = edgesIn.groupBy("src_domain").agg(count(lit(1)).as("outdeg"))
-      val e = edgesIn.join(outdeg, "src_domain")
-        .join(broadcast(superRoots5.select(col("root").as("sr"), lit(true).as("flag"))),
-          col("src_root") === col("sr"), "left")
-        .select(col("src_domain"), col("src_root"), col("dst_domain"),
-          col("outdeg"), coalesce(col("flag"), lit(false)).as("src_super"))
-        .repartition(nParts, col("src_domain")).persist()
-      time("g5p-e-pin")(e.count())
-      var ranks = nodes.withColumn("rank_u", lit(graft.ops.PageRank.Scale)).localCheckpoint(true)
-      time("g5p-ranks0")(ranks.count())
-      for (it <- 1 to 5) {
-        time(s"g5p-iter-$it") {
-          val contribs = e
-            .join(ranks.select(col("domain"), col("rank_u")), col("src_domain") === col("domain"))
-            .select(col("dst_domain"), col("src_root"), col("src_super"),
-              expr("rank_u div outdeg").as("contrib_u"))
-          val perRoot = contribs
-            .groupBy(col("dst_domain"), col("src_root"), col("src_super"))
-            .agg(sum(col("contrib_u")).as("s"), count(lit(1)).as("c"))
-            .select(col("dst_domain"),
-              when(col("src_super"), col("s")).otherwise(expr("s div c")).as("v"))
-          val acc = perRoot.groupBy(col("dst_domain")).agg(sum(col("v")).as("acc"))
-          ranks = nodes
-            .join(acc, col("domain") === col("dst_domain"), "left")
-            .select(col("domain"), col("root"),
-              (lit(150000000000L) +
-                expr("(coalesce(acc, 0) div 1000) * 850 + ((coalesce(acc, 0) % 1000) * 850) div 1000"))
-                .as("rank_u"))
-            .localCheckpoint(true)
-          ranks.count()
-        }
-      }
-      edgesIn.unpersist(); nodes.unpersist(); e.unpersist()
-    }
-    for (interval <- Seq(1, 5)) {
-      time(s"g5-interval-$interval") {
-        graft.ops.PageRank.run(
-            graft.queries.GraphQueries.prEdges(spark, dir), superRoots5,
-            iters = 5, checkpointInterval = interval)
-          .orderBy("domain")
-          .write.format("noop").mode("overwrite").save()
-        0L
-      }
-    }
     spark.stop()
   }
 }

@@ -85,4 +85,21 @@ class D12TruthSpec extends AnyFunSuite with SparkSuite {
         s"missing=${replay -- prod}")
     assert(replay.nonEmpty, "fixture produced no truth pairs — vacuous")
   }
+
+  test("empty documents pair with nothing, as in the exhaustive replay") {
+    // two probe rows with no shingles: jaccard3Sorted of two empty sets
+    // is NaN, which Spark orders above every number, so the truth join
+    // must exclude empty sets itself; the replay's explode drops them
+    import spark.implicits._
+    val empty = Seq((-1L, ""), (-2L, "ab")).toDF("doc_id", "text")
+      .select(col("doc_id"), Dedupe.shingles3(col("text")).as("sh"))
+    val sh = shingleTable.unionByName(empty)
+    assert(sh.where(size(col("sh")) === 0).count() >= 2)
+    val prod = DedupeQueries.d12TruthPairs(sh, P)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val replay = exhaustive(sh)
+    assert(prod == replay,
+      s"truth set drifted: only-production=${prod -- replay}, " +
+        s"missing=${replay -- prod}")
+  }
 }

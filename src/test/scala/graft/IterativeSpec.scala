@@ -1,45 +1,73 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{Dedupe, PageRank}
+import graft.ops.{Dedupe, PageRank, Ppr}
+import graft.queries.Registry
 
-/** The iterative ops' reliable-checkpoint path: with a checkpointDir set,
-  * per-round state goes through `df.checkpoint()` (cluster-fault-tolerant)
-  * instead of executor-local blocks, and the results are identical. */
+/** The iterative ops' reliable-checkpoint path: with
+  * `spark.graft.checkpointDir` set on the session, per-round state goes
+  * through `df.checkpoint()` (cluster-fault-tolerant) instead of
+  * executor-local blocks, and the results are identical. Also pins that
+  * repeated graph queries leave no cache entry behind. */
 class IterativeSpec extends AnyFunSuite with SparkSuite {
 
-  private def ckDir(): String =
-    java.nio.file.Files.createTempDirectory("graft_ck").toString
-
   test("connected components: reliable checkpoint path matches default") {
-    import spark.implicits._
-    val pairs = Seq(
-      (1L, 2L), (2L, 3L), (5L, 6L), (8L, 9L), (9L, 10L), (10L, 11L),
-    ).toDF("doc_a", "doc_b")
-    val want = Dedupe.connectedComponents(pairs)
-      .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val got = Dedupe.connectedComponents(pairs, checkpointDir = Some(ckDir()))
-      .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    def labels(s: SparkSession) = {
+      import s.implicits._
+      val pairs = Seq(
+        (1L, 2L), (2L, 3L), (5L, 6L), (8L, 9L), (9L, 10L), (10L, 11L),
+      ).toDF("doc_a", "doc_b")
+      Dedupe.connectedComponents(pairs)
+        .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    }
+    val want = labels(spark)
+    val (session, dir) = reliableSession()
+    val got = labels(session)
     assert(got == want)
     assert(got.map(_._2).distinct.sorted == Seq(1L, 5L, 8L))
+    assert(checkpointFiles(dir) > 0, s"no reliable checkpoint files under $dir")
   }
 
   test("pagerank: reliable checkpoint path matches default") {
-    import spark.implicits._
-    val edges = Seq(
-      (1L, 100L, 2L, 200L), (2L, 200L, 3L, 300L), (3L, 300L, 1L, 100L),
-      (4L, 100L, 2L, 200L),
-    ).toDF("src_domain", "src_root", "dst_domain", "dst_root")
-    val supers = Seq(100L).toDF("root")
-    def tuples(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("domain").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val want = tuples(PageRank.run(edges, supers, iters = 3))
-    val got = tuples(PageRank.run(edges, supers, iters = 3,
-      checkpointDir = Some(ckDir())))
+    // PageRank and personalized PageRank over one edge set
+    def ranks(s: SparkSession) = {
+      import s.implicits._
+      val edges = Seq(
+        (1L, 100L, 2L, 200L), (2L, 200L, 3L, 300L), (3L, 300L, 1L, 100L),
+        (4L, 100L, 2L, 200L),
+      ).toDF("src_domain", "src_root", "dst_domain", "dst_root")
+      Seq(
+        PageRank.run(edges, Seq(100L).toDF("root"), iters = 3),
+        Ppr.run(edges, Seq(1L).toDF("domain"), iters = 3),
+      ).map(_.orderBy("domain").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
+    }
+    val want = ranks(spark)
+    val (session, dir) = reliableSession()
+    val got = ranks(session)
     assert(got == want)
-    assert(got.nonEmpty)
+    assert(got.forall(_.nonEmpty))
+    assert(checkpointFiles(dir) > 0, s"no reliable checkpoint files under $dir")
+  }
+
+  test("repeated g5, g12 and g10 runs leave no cache entry behind") {
+    // Read the CacheManager the way the benchmark's cached_left does.
+    // Persistent RDDs are not counted: local-checkpoint blocks there are
+    // weakly held and dropped by the ContextCleaner after a GC, so that
+    // count is not deterministic.
+    def cached(): Int = {
+      val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sharedState.cacheManager
+      val f = cm.getClass.getDeclaredMethod("cachedData")
+      f.setAccessible(true)
+      f.invoke(cm).asInstanceOf[scala.collection.Seq[_]].size
+    }
+    val before = cached()
+    for (_ <- 1 to 3; q <- Seq("g5_pagerank", "g12_ppr", "g10_hits"))
+      assert(Registry.queries(q)(spark, sfDir).collect().nonEmpty, q)
+    assert(cached() == before, "graph queries left cache entries behind")
   }
 
   test("pagerank subdomain sampling: cap averages over the md5-chosen sample") {
@@ -122,9 +150,7 @@ class IterativeSpec extends AnyFunSuite with SparkSuite {
       Dedupe.minhashNearDupPairs(docs, "doc_id", "text", 0.8, 72, 6)
         .select("doc_a", "doc_b"))
 
-    val session = spark.newSession()
-    val dir = ckDir()
-    session.conf.set(graft.ops.Iterative.CheckpointDirKey, dir)
+    val (session, dir) = reliableSession()
     val docsR = session.read.parquet(s"$sfDir/documents.parquet").limit(120)
     val gotPairs = pairs(
       Dedupe.minhashNearDupPairs(docsR, "doc_id", "text", 0.8, 72, 6)
@@ -140,11 +166,6 @@ class IterativeSpec extends AnyFunSuite with SparkSuite {
     assert(session.table(s"ivfck_${suffix}_cells").count() == emb.count())
 
     // reliable checkpoint files actually landed on the checkpoint fs
-    def rddFiles(d: java.io.File): Int =
-      d.listFiles().map(f =>
-        if (f.isDirectory) rddFiles(f)
-        else if (f.getName.startsWith("part-")) 1 else 0).sum
-    assert(rddFiles(new java.io.File(dir)) > 0,
-      s"no reliable checkpoint files under $dir")
+    assert(checkpointFiles(dir) > 0, s"no reliable checkpoint files under $dir")
   }
 }

@@ -166,6 +166,35 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     } finally edgesIn.unpersist()
   }
 
+  test("a pinned state generation joins its key-pinned invariant exchange-free") {
+    // Pins the mechanism PageRank/Ppr's loop relies on: a generation
+    // pinned by Pins.state, derived from an invariant pinned on the join
+    // key, keeps that HashPartitioning through InMemoryTableScan, so the
+    // next round's join against the edge invariant moves no row.
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions._
+    val session = spark.newSession()
+    session.conf.set("spark.sql.adaptive.enabled", "false")
+    session.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    import session.implicits._
+    val pins = new graft.ops.Iterative.Pins(session)
+    try {
+      val e = pins.invariant(Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L))
+        .toDF("src_domain", "dst_domain"), Some("src_domain"))
+      val nodes = pins.invariant(Seq(1L, 2L, 3L).toDF("domain"), Some("domain"))
+      val acc = e.join(nodes.withColumn("rank_u", lit(6L)),
+          col("src_domain") === col("domain"))
+        .groupBy("dst_domain").agg(sum("rank_u").as("acc"))
+      val gen = pins.state(nodes.join(acc, col("domain") === col("dst_domain"), "left")
+        .select(col("domain"), coalesce(col("acc"), lit(0L)).as("rank_u")))
+      val step = e.join(gen, col("src_domain") === col("domain"))
+      val plan = step.queryExecution.executedPlan
+      assert(plan.collect { case x: ShuffleExchangeExec => x }.isEmpty,
+        s"the state join re-shuffled a pinned side:\n$plan")
+      assert(step.count() == 4)
+    } finally pins.release()
+  }
+
   test("incremental crawldb combine joins the half-merges exchange-free") {
     // r21 shape of c2: ONE hash exchange per half-merge (the rank
     // window's — the merged-record aggregate rides that partitioning
